@@ -5,10 +5,12 @@ we emit equivalent HTML by string construction (SURVEY §7 non-goals: DOM
 fidelity is not required, structural equivalence is).
 
 Division of labor at scale:
-* the tree CLOSURE is distributed (operators.tree — O(depth) joins);
+* the rows of a page are gathered level by level, all pages at once
+  (``render_pages``): one filter-and-collect job per tree level, not one
+  query per node as in the reference;
 * the final DOM assembly of ONE page is inherently sequential and tiny
   (one story's comments), so it runs on the driver over the collected
-  closure — the same boundary the reference draws, minus the N+1 queries.
+  rows — the same boundary the reference draws, minus the N+1 queries.
 """
 
 from __future__ import annotations
@@ -17,8 +19,7 @@ import html as _html
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-
-from hnarchive_spark.operators.tree import tree_closure
+from pyspark.sql import functions as F
 
 DATE_FMT = "%Y %b %d %H:%M:%S"
 
@@ -132,32 +133,73 @@ def _render_subtree(node: dict, children_by_parent: dict, as_root: bool = False)
     return ""
 
 
-def render_page(items: DataFrame, root_id: int) -> str:
-    """E5 html_render (hnarchive.py:504-515): one HTML page for one root.
+def _rows(items: DataFrame, cond) -> list[dict]:
+    return [r.asDict() for r in items.filter(cond).collect()]
 
-    Distributed closure (G1) + poll-option lookup (Q3), then driver-side
-    assembly (G2).
+
+def render_pages(items: DataFrame, root_ids: Sequence[int]) -> dict[int, str]:
+    """E5 html_render (hnarchive.py:504-515): one HTML page per root.
+
+    A driver-side level walk over full item rows, all roots at once: the
+    first job collects the roots, their children and their poll options
+    (Q3); each later job collects the children of the previous level, and
+    the walk stops at the first empty level.  N pages of max depth d cost
+    d + 1 jobs — the rows each page collected anyway, with no closure
+    join-back — then each page is assembled on the driver (G2).
+    Returns ``{root_id: html}``; a missing root renders as ``""``.
     """
-    closure = tree_closure(items, [root_id])
-    rows = [r.asDict() for r in closure.join(items, "id").collect()]
-    by_id = {r["id"]: r for r in rows}
+    roots = list(dict.fromkeys(int(r) for r in root_ids))
+    if not roots:
+        return {}
+    first = _rows(
+        items,
+        F.col("id").isin(roots) | F.col("parent").isin(roots) | F.col("poll").isin(roots),
+    )
+    found = set(roots) & {r["id"] for r in first}
+    opts: dict[int, list[dict]] = {}
+    for r in first:
+        if r.get("poll") in found:
+            opts.setdefault(r["poll"], []).append(r)
+
+    by_id: dict[int, dict] = {}
     children: dict[int, list[dict]] = {}
-    for r in rows:
-        p = r.get("parent")
-        if p is not None and r["id"] != root_id:
-            children.setdefault(p, []).append(r)
-    root = by_id.get(root_id)
-    if root is None:
-        return ""
-    if root.get("type") == "poll":
-        opts = [
-            r.asDict()
-            for r in items.filter(items.poll == root_id).collect()  # Q3 edge
-        ]
-        opts.sort(key=lambda r: (-(r.get("score") or 0), r["id"]))
-        root["_opts_html"] = "".join(render_pollopt(o) for o in opts)
-    body = _render_subtree(root, children, as_root=True)
-    return f"<html><head><title>{root_id}</title></head><body>{body}</body></html>"
+
+    def visit(rows: list[dict]) -> list[int]:
+        new = []
+        for r in rows:
+            if r["id"] in by_id:
+                continue
+            by_id[r["id"]] = r
+            children.setdefault(r.get("parent"), []).append(r)
+            new.append(r["id"])
+        return new
+
+    level = visit([r for r in first if r["id"] in found or r.get("parent") in found])
+    frontier = [i for i in level if i not in found]  # roots' children came in the first job
+    while frontier:
+        frontier = visit(_rows(items, F.col("parent").isin(frontier)))
+
+    pages = {}
+    for rid in roots:
+        if rid not in by_id:
+            pages[rid] = ""
+            continue
+        root = dict(by_id[rid])
+        kids = children
+        p = root.get("parent")
+        if p in by_id:  # on a parent cycle the root would render under itself
+            kids = {**children, p: [k for k in children[p] if k["id"] != rid]}
+        if root.get("type") == "poll":
+            ranked = sorted(opts.get(rid, []), key=lambda r: (-(r.get("score") or 0), r["id"]))
+            root["_opts_html"] = "".join(render_pollopt(o) for o in ranked)
+        body = _render_subtree(root, kids, as_root=True)
+        pages[rid] = f"<html><head><title>{rid}</title></head><body>{body}</body></html>"
+    return pages
+
+
+def render_page(items: DataFrame, root_id: int) -> str:
+    """One page for one root: ``render_pages`` with a single root."""
+    return render_pages(items, [root_id])[int(root_id)]
 
 
 def render_to_files(
@@ -165,12 +207,10 @@ def render_to_files(
 ) -> dict[int, str]:
     """K4 sink: one page per root; template contains ``{id}``
     (hnarchive.py:510-515). Returns {root_id: html} (also written if a
-    template is given)."""
-    out = {}
-    for rid in root_ids:
-        page = render_page(items, rid)
-        out[rid] = page
-        if output_template:
+    template is given). All pages share one level walk."""
+    out = render_pages(items, root_ids)
+    if output_template:
+        for rid, page in out.items():
             with open(output_template.format(id=rid), "w") as fh:
                 fh.write(page)
     return out

@@ -1,5 +1,5 @@
 from hnarchive_spark.operators.merge import COALESCE_COLS, OVERWRITE_COLS, collapse_batch, merge_items
-from hnarchive_spark.operators.tree import tree_closure, tree_edges_for_roots
+from hnarchive_spark.operators.tree import tree_closure
 
 __all__ = [
     "merge_items",
@@ -7,5 +7,4 @@ __all__ = [
     "COALESCE_COLS",
     "OVERWRITE_COLS",
     "tree_closure",
-    "tree_edges_for_roots",
 ]

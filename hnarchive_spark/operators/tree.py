@@ -4,20 +4,13 @@ The reference's ``build_item_tree`` (hnarchive.py:306-319) materializes one
 comment tree with an N+1 recursive point-query loop — one SELECT per node.
 The Spark-native replacement is a recursive CTE (``WITH RECURSIVE``,
 Spark 4.1): one declarative query whose fixpoint the engine drives
-internally (UnionLoop in the physical plan) — no per-level driver round
-trips at all.  A level-at-a-time BFS loop (one broadcast join per level,
-O(depth) jobs) remains as the fallback for engines without recursive CTEs
-and as the independent cross-check in tests.
+(UnionLoop in the physical plan).  It is one query, not one job: on Spark
+4.1 the UnionLoop launches about five jobs per tree level, so a closure
+costs O(depth) jobs.  Page rendering, which is latency-bound, walks the
+levels itself instead (``functions.render.render_pages``).
 
-Scale notes:
-* the frontier is tiny relative to ``items`` -> broadcast it, so each step
-  is a broadcast hash join against the (parent-partitioned) items scan with
-  pushed-down ``parent IS NOT NULL``;
-* ``localCheckpoint`` truncates the growing lineage each level (without it
-  the plan doubles every iteration and the driver chokes long before data
-  size matters);
-* depth is unbounded in HN threads, so the loop runs to fixpoint, not to a
-  constant (SURVEY §7 'what's hard' (c)).
+Depth is unbounded in HN threads (SURVEY §7 'what's hard' (c)), so the CTE
+lifts Spark's default 100-level recursion limit and runs to fixpoint.
 """
 
 from __future__ import annotations
@@ -29,6 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _view_counter = itertools.count()
+
+# Spark's default cap (spark.sql.cteRecursionLevelLimit) is 100 levels; an
+# acyclic forest needs as many levels as it is deep.
+_MAX_LEVEL = 2**31 - 1
 
 
 def tree_closure(
@@ -43,24 +40,12 @@ def tree_closure(
     Returns ``(root_id, id, depth)`` — every node of every requested tree
     with its distance from the root (root itself at depth 0).
 
-    Primary plan: a recursive CTE (Spark 4.1 ``WITH RECURSIVE``) — ONE
-    declarative query, no per-level driver round-trips (the engine runs the
-    fixpoint internally).  Falls back to the level-at-a-time BFS loop if the
-    engine rejects recursive CTEs.
+    One recursive CTE (Spark 4.1 ``WITH RECURSIVE``); the engine runs the
+    fixpoint at about five jobs per level.  With unique ids, a walk down
+    ``parent`` edges can only revisit a node by coming back to its root, so
+    the ``i.id <> c.root_id`` guard makes the fixpoint finite even on a
+    cyclic parent chain.
     """
-    try:
-        return _tree_closure_recursive(items, root_ids, id_col, parent_col, max_depth)
-    except Exception:
-        return _tree_closure_bfs(items, root_ids, id_col, parent_col, max_depth)
-
-
-def _tree_closure_recursive(
-    items: DataFrame,
-    root_ids: Sequence[int],
-    id_col: str,
-    parent_col: str,
-    max_depth: int | None,
-) -> DataFrame:
     spark = items.sparkSession
     view = f"_tree_closure_src_{next(_view_counter)}"
     items.select(
@@ -70,67 +55,12 @@ def _tree_closure_recursive(
     roots = ", ".join(str(int(r)) for r in root_ids)
     bound = f"AND c.depth < {int(max_depth)}" if max_depth is not None else ""
     return spark.sql(f"""
-        WITH RECURSIVE closure AS (
+        WITH RECURSIVE closure MAX RECURSION LEVEL {_MAX_LEVEL} AS (
           SELECT id AS root_id, id, 0 AS depth FROM {view} WHERE id IN ({roots})
           UNION ALL
           SELECT c.root_id, i.id, c.depth + 1 AS depth
           FROM {view} i JOIN closure c ON i.parent = c.id
-          WHERE i.parent IS NOT NULL {bound}
+          WHERE i.parent IS NOT NULL AND i.id <> c.root_id {bound}
         )
         SELECT root_id, id, depth FROM closure
     """)
-
-
-def _tree_closure_bfs(
-    items: DataFrame,
-    root_ids: Sequence[int],
-    id_col: str = "id",
-    parent_col: str = "parent",
-    max_depth: int | None = None,
-) -> DataFrame:
-    """Level-at-a-time BFS fallback: one broadcast join per level, fixpoint
-    detected with ``isEmpty`` — O(depth) jobs."""
-    edges = items.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(parent_col).cast("long").alias("parent"),
-    ).filter(F.col("parent").isNotNull())
-
-    frontier = items.filter(F.col(id_col).isin(list(root_ids))).select(
-        F.col(id_col).cast("long").alias("root_id"),
-        F.col(id_col).cast("long").alias("id"),
-        F.lit(0).alias("depth"),
-    )
-    # NOTE: no per-level localCheckpoint — on Spark 4.1 a union of
-    # checkpointed levels trips attribute resolution ("key not found") when
-    # the closure is later self-joined against the source. Lineage grows
-    # linearly with depth (one join per level), which is fine for
-    # comment-tree depths; beyond ~100 levels cache+count the frontier.
-    result = frontier
-    depth = 0
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            break
-        e, f = edges.alias("e"), frontier.alias("f")
-        nxt = e.join(F.broadcast(f), F.col("e.parent") == F.col("f.id")).select(
-            F.col("f.root_id").alias("root_id"),
-            F.col("e.id").alias("id"),
-            (F.col("f.depth") + 1).alias("depth"),
-        )
-        if nxt.isEmpty():
-            break
-        result = result.union(nxt)
-        frontier = nxt
-        depth += 1
-    return result
-
-
-def tree_edges_for_roots(items: DataFrame, root_ids: Sequence[int]) -> DataFrame:
-    """Closure rows joined back to full item rows (for rendering, G2).
-
-    Children within a level are ordered by (time, id) at render time —
-    the reference's per-parent time sort (hnarchive.py:350).
-    """
-    closure = tree_closure(items, root_ids)
-    return closure.join(items, "id").select(
-        closure.root_id, closure.depth, *[items[c] for c in items.columns]
-    )

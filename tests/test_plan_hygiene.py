@@ -64,8 +64,9 @@ def test_contamination_bloom_prunes_before_semi_join(spark):
 
 
 def test_tree_closure_uses_recursive_cte(spark):
-    """q_tree_closure must run as ONE recursive-CTE job (UnionLoop operator),
-    not the per-level BFS fallback with its driver round-trips."""
+    """q_tree_closure must plan as ONE recursive-CTE query (UnionLoop
+    operator) whose fixpoint the engine drives — about five jobs per tree
+    level on Spark 4.1 — not a driver-side loop of per-level joins."""
     from hnarchive_spark.plans.registry import all_queries
 
     df = all_queries()["q_tree_closure"](spark, SF)
