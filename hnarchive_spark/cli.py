@@ -707,11 +707,9 @@ def cmd_release(spark, args):
         pack_strategy=args.pack_strategy,
     )
     if args.prune_old:
-        from hnarchive_spark.plans.release import prune_release_versions
+        from hnarchive_spark.sources.index_version import prune_index_versions
 
-        # release-aware prune (ADVICE r17): unlike the raw index pruner,
-        # this never removes a LIVE concurrent builder's in-progress dir
-        manifest["pruned"] = prune_release_versions(args.out)
+        manifest["pruned"] = prune_index_versions(args.out)
     print(_json.dumps(manifest))
     return 0
 

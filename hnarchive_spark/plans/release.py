@@ -38,11 +38,8 @@ write — nothing downstream re-runs the gates.
 
 from __future__ import annotations
 
-import errno
 import json
 import os
-import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -149,184 +146,6 @@ def _pack_selected(
     return fold(selected.select("source", "doc_id", "n_tokens"), pack_budget)
 
 
-def _existing_versions(out_dir: str) -> list[int]:
-    try:
-        names = os.listdir(out_dir)
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(n[1:])
-        for n in names
-        if n.startswith("v") and n[1:].isdigit()
-        and os.path.isdir(os.path.join(out_dir, n))
-    )
-
-
-# A _BUILDING.json older than this reads as dead even when its pid is
-# running: pids recycle, and on a long-lived host a recycled pid would
-# otherwise make a genuinely dead torn dir look alive FOREVER, deferring
-# heal indefinitely (VERDICT r17 'what's wrong' #3).  No release build
-# legitimately runs this long; a real builder that somehow does loses
-# only its in-progress dir (it re-runs), never published data.
-BUILDER_STALE_SECONDS = 6 * 3600
-
-# A marker-less _claim.* staging dir younger than this is presumed to be
-# a concurrent run mid-claim (between mkdtemp and its marker write) and
-# is never swept — the grace that closes the last half-made-dir window.
-CLAIM_GRACE_SECONDS = 300
-
-_CLAIM_PREFIX = "_claim."  # staging dirs for atomic version allocation
-
-
-def _builder_alive(vdir: str) -> bool:
-    """True if the ``_BUILDING.json`` marker names a process that is
-    still running on this host AND the marker is fresh — the guard that
-    keeps a second release run from rmtree-ing a LIVE first run's
-    in-progress version (review r17: without it, auto-heal turns an
-    accidental concurrent run into active data destruction).  A
-    missing/corrupt/unreadable marker, a dead pid, or a marker older
-    than :data:`BUILDER_STALE_SECONDS` (pid-reuse guard: a recycled pid
-    must not defer heal forever) reads as not-alive: exactly the
-    crashed-run case heal exists for."""
-    try:
-        with open(os.path.join(vdir, "_BUILDING.json")) as fh:
-            marker = json.load(fh)
-        pid = int(marker["pid"])
-        ts = marker.get("ts")
-        if ts is not None and time.time() - float(ts) > BUILDER_STALE_SECONDS:
-            return False  # stale marker: treat a matching pid as recycled
-    except (OSError, ValueError, KeyError, TypeError):
-        # unreadable file, non-dict/null JSON (TypeError — ADVICE r17),
-        # malformed pid/ts: all read as not-alive, never as a crash
-        return False
-    if pid <= 0:
-        # no real builder has a non-positive pid — and os.kill(-1, 0)
-        # probes a whole PROCESS GROUP (always "alive"), so a corrupt
-        # negative pid would otherwise defer heal forever (review r18)
-        return False
-    try:
-        os.kill(pid, 0)  # signal 0: existence probe, delivers nothing
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:  # pid exists but owned elsewhere — alive
-        return True
-    except OverflowError:
-        # a pid outside the C pid_t range cannot name a live process;
-        # reading it as a crash would brick every subsequent
-        # release/heal/prune run on one corrupt marker (review r18)
-        return False
-
-
-def torn_release_dirs(out_dir: str) -> list[str]:
-    """Healable torn attempts — detection only (the maintenance
-    scheduler's due-predicate); :func:`heal_torn_releases` is the
-    removal.  Three shapes qualify, all requiring a not-alive builder:
-
-    * a manifest-less, unpublished version dir (died between its writes
-      and its manifest);
-    * a MANIFEST-BEARING unpublished dir that still carries its
-      ``_BUILDING.json`` and whose version is ABOVE the published one
-      (died between the manifest write and the pointer swap — readers
-      never saw it; ADVICE r17: without this arm such a dir leaked
-      forever).  A superseded previously-published version has neither
-      the marker (removed after its own publish) nor a number above the
-      pointer, so retain-until-pruned is untouched;
-    * a leftover ``_claim.*`` allocation-staging dir (died between
-      mkdtemp and the rename that claims a version number)."""
-    from hnarchive_spark.sources.index_version import current_index_version
-
-    cur = current_index_version(out_dir)
-    torn = []
-    for v in _existing_versions(out_dir):
-        if v == cur:
-            continue
-        vdir = os.path.join(out_dir, f"v{v}")
-        has_manifest = os.path.exists(os.path.join(vdir, "_MANIFEST.json"))
-        has_marker = os.path.exists(os.path.join(vdir, "_BUILDING.json"))
-        unpublished_above = cur is None or v > cur
-        if has_manifest and not (has_marker and unpublished_above):
-            continue  # published-then-superseded: retained until pruned
-        if not _builder_alive(vdir):
-            torn.append(vdir)
-    try:
-        names = os.listdir(out_dir)
-    except FileNotFoundError:
-        names = []
-    for name in names:
-        full = os.path.join(out_dir, name)
-        if name.startswith(_CLAIM_PREFIX) and os.path.isdir(full):
-            # GRACE WINDOW: between mkdtemp and the marker write inside
-            # it, a claim dir is marker-less — the same
-            # heal-sees-a-half-made-dir race the staged rename closed
-            # for vdirs.  A very fresh claim dir is therefore presumed
-            # live; a genuinely dead one ages past the grace and sweeps
-            # on the next pass.
-            try:
-                fresh = time.time() - os.path.getmtime(full) < CLAIM_GRACE_SECONDS
-            except OSError:  # raced away already
-                continue
-            if not fresh and not _builder_alive(full):
-                torn.append(full)
-    return torn
-
-
-def heal_torn_releases(out_dir: str) -> list[str]:
-    """Detect and remove TORN releases (VERDICT r16 'what's wrong' #2):
-    see :func:`torn_release_dirs` for what qualifies — runs that died
-    before their publish, which readers never saw (the ``_CURRENT``
-    pointer only ever moves AFTER the manifest lands), so deleting them
-    is safe and keeps the version numbering clean.  Two dirs are never
-    touched: the PUBLISHED version (a pointer at a manifest-less dir
-    would be out-of-band mutation — left for a human, loudly), and a
-    dir whose ``_BUILDING.json`` is fresh with a live pid (a
-    concurrently running release — same-host detection; version numbers
-    are allocated collision-free regardless).  Returns removed paths."""
-    import shutil
-
-    removed = []
-    for vdir in torn_release_dirs(out_dir):
-        shutil.rmtree(vdir)
-        removed.append(vdir)
-    return removed
-
-
-def prune_release_versions(out_dir: str) -> list[str]:
-    """Release-aware prune (ADVICE r17): drop superseded version dirs
-    like ``prune_index_versions``, but NEVER a dir whose builder is
-    still alive — the raw index pruner rmtree's every non-current
-    ``v<N>`` unconditionally, which would bypass the ``_builder_alive``
-    guard and destroy a concurrent run's in-progress build.  Allocation
-    staging dirs (``_claim.*``) with live builders are likewise left;
-    dead ones are swept."""
-    import shutil
-
-    from hnarchive_spark.sources.index_version import current_index_version
-
-    cur = current_index_version(out_dir)
-    if cur is None:
-        return []
-    removed = []
-    for name in sorted(os.listdir(out_dir)):
-        full = os.path.join(out_dir, name)
-        if not os.path.isdir(full) or name == f"v{cur}":
-            continue
-        versioned = name.startswith("v") and name[1:].isdigit()
-        if not (versioned or name.startswith(_CLAIM_PREFIX)):
-            continue
-        if name.startswith(_CLAIM_PREFIX):
-            try:  # same mid-claim grace as torn detection
-                if time.time() - os.path.getmtime(full) < CLAIM_GRACE_SECONDS:
-                    continue
-            except OSError:
-                continue
-        if _builder_alive(full):
-            continue  # a LIVE concurrent build — never prune it
-        shutil.rmtree(full)
-        removed.append(full)
-    return removed
-
-
 def release_root(out_dir: str) -> str:
     """The PUBLISHED release's directory (``<out>/v<N>`` behind the
     atomic ``_CURRENT`` pointer) — every reader resolves through here,
@@ -362,7 +181,7 @@ def run_release(
     manifest.  The pointer swaps only after the manifest is on disk, so
     a crash anywhere mid-run leaves the previous release fully readable
     and the torn attempt detectable; the next run self-heals it
-    (:func:`heal_torn_releases`) and supersedes with a fresh version.
+    (index_version.heal_torn_versions) and supersedes with a fresh version.
 
     ``tokenizer_path`` points at a trained tokenizer store
     (sources/tokenizer_store.py): the budget / pack / shard / datacard
@@ -403,7 +222,10 @@ def run_release(
     token stream) is test-locked."""
     from hnarchive_spark.plans.dedup import N_SHARDS, SELECT_TOKEN_BUDGET
     from hnarchive_spark.plans.textops import PACK_BUDGET
-    from hnarchive_spark.sources.index_version import current_index_version
+    from hnarchive_spark.sources.index_version import (
+        heal_torn_versions,
+        new_index_version,
+    )
 
     token_budget = SELECT_TOKEN_BUDGET if token_budget is None else token_budget
     pack_budget = PACK_BUDGET if pack_budget is None else pack_budget
@@ -417,59 +239,23 @@ def run_release(
     # self-heal any torn prior attempt, then build the next version OFF
     # to the side of whatever is published — readers keep resolving the
     # old release through the pointer until the very last line.  The
-    # version number is claimed by RENAMING a staged dir that already
-    # contains the _BUILDING liveness marker (ADVICE r17: a bare mkdir
-    # followed by the marker write left a window where a concurrent
-    # run's heal scan saw a marker-less empty dir and removed the
-    # just-claimed live dir); rename onto an existing non-empty dir
-    # fails, so two concurrent runs can never interleave into one vdir,
-    # and there is no instant at which a claimed vdir lacks its marker.
-    healed = heal_torn_releases(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    staged = tempfile.mkdtemp(prefix=_CLAIM_PREFIX, dir=out_dir)
-    with open(os.path.join(staged, "_BUILDING.json"), "w") as fh:
-        json.dump({"pid": os.getpid(), "ts": time.time()}, fh)
-    new_v = max([current_index_version(out_dir) or 0] + _existing_versions(out_dir))
-    while True:
-        new_v += 1
-        vdir = os.path.join(out_dir, f"v{new_v}")
-        try:
-            os.rename(staged, vdir)
-            break
-        except OSError as exc:  # a concurrent run claimed this number
-            if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-                raise
-            continue
-    try:
-        return _build_release(
-            spark, sf_dir, out_dir, vdir, new_v, healed,
+    # claim, the liveness marker and the publish are index_version's
+    # (new_index_version); the manifest is the last write inside the
+    # block, so a manifest-less attempt never publishes.
+    healed = heal_torn_versions(out_dir)
+    with new_index_version(out_dir) as vdir:
+        manifest = _build_release(
+            spark, sf_dir, vdir, healed,
             token_budget, pack_budget, n_shards,
             tokenizer_path, tokenizer_encoder, emit_tokens, pack_strategy,
         )
-    except BaseException:
-        # a run that FAILS before its manifest unregisters its liveness
-        # marker so the next run's heal treats the torn dir as dead
-        # immediately; a hard kill leaves the marker with a dead pid,
-        # which _builder_alive resolves the same way.  A failure AFTER
-        # the manifest landed (the publish itself raised) KEEPS the
-        # marker: manifest-bearing + marker + unpublished is exactly the
-        # shape torn_release_dirs heals once the builder dies, whereas a
-        # marker-less manifest-bearing dir would read as a superseded
-        # published version and leak forever (ADVICE r17).
-        if not os.path.exists(os.path.join(vdir, "_MANIFEST.json")):
-            try:
-                os.remove(os.path.join(vdir, "_BUILDING.json"))
-            except OSError:
-                pass
-        raise
+    return manifest
 
 
 def _build_release(
     spark: SparkSession,
     sf_dir: str,
-    out_dir: str,
     vdir: str,
-    new_v: int,
     healed: list[str],
     token_budget: int,
     pack_budget: int,
@@ -480,12 +266,11 @@ def _build_release(
     pack_strategy: str,
 ) -> dict:
     """run_release's build body: everything between version allocation
-    and the pointer swap, under the caller's torn-marker guard."""
+    and the pointer swap, ending with the manifest write."""
     from hnarchive_spark.plans.curation import (
         _url_pipeline_stages,
         funnel_from_stages,
     )
-    from hnarchive_spark.sources.index_version import publish_index_version
 
     d = load(spark, sf_dir, "documents")
 
@@ -788,7 +573,7 @@ def _build_release(
         all(v >= 0 for v in fates.values()) and fates["selected"] == n_written
     )
     manifest = {
-        "version": new_v,
+        "version": int(os.path.basename(vdir)[1:]),
         "sf_dir": os.path.abspath(sf_dir),
         "params": {
             "token_budget": token_budget,
@@ -814,22 +599,11 @@ def _build_release(
         raise ValueError(
             f"release conservation violated: fates={fates} written={n_written}"
         )
-    # land the manifest, publish, and only THEN unregister the liveness
-    # marker (ADVICE r17: removing the marker before the manifest left a
-    # window where the vdir was marker-less AND manifest-less, so a
-    # concurrent run's heal would rmtree a fully-built release
-    # mid-publish).  A crash before the manifest leaves a manifest-less
-    # marked dir (torn once the pid dies); between manifest and publish,
-    # a manifest-bearing marked unpublished dir (likewise torn);
-    # between publish and marker removal, a published dir with a stale
-    # marker — harmless (heal and prune both skip the current version).
+    # the manifest is the block's last write: the pointer swap follows
+    # it, so a crash anywhere before leaves the old release current and
+    # this attempt marked, unpublished and healable
     tmp = os.path.join(vdir, "_MANIFEST.json.tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=1)
     os.replace(tmp, os.path.join(vdir, "_MANIFEST.json"))
-    # the publish: one atomic pointer swap, strictly AFTER the manifest
-    # — a crash before this line leaves the old release current and this
-    # attempt torn-detectable
-    publish_index_version(out_dir, new_v)
-    os.remove(os.path.join(vdir, "_BUILDING.json"))
     return manifest

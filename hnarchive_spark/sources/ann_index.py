@@ -29,9 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 from hnarchive_spark.operators.similarity import (
@@ -834,18 +833,15 @@ def compact_lsh_index(spark, path: str) -> str:
     compaction therefore reads the index's own rows (no corpus access,
     no re-hashing) and rewrites them clustered by bucket; probe rows are
     unchanged by construction.  Returns the new version directory."""
-    old_root = index_root(path)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        spark.read.parquet(old_root)
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(vdir)
-    )
-    publish_index_version(path, new_v)
+    old = spark.read.parquet(index_root(path))
+    with new_index_version(path) as vdir:
+        (
+            old.repartition("bucket")
+            .write.mode("append")  # the claimed root holds its marker
+            .option("compression", "zstd")
+            .partitionBy("bucket")
+            .parquet(vdir)
+        )
     return vdir
 
 
@@ -868,10 +864,10 @@ def rebuild_ivf_index(
     ``<path>/v<N>`` tree, published by the atomic ``_CURRENT`` pointer
     (sources/index_version.py), so no file a concurrent probe may hold
     open is ever touched.  Returns the new version directory."""
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    build_ivf_index(embeddings, vdir, id_col=id_col, vec_col=vec_col, list_col=list_col)
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        build_ivf_index(
+            embeddings, vdir, id_col=id_col, vec_col=vec_col, list_col=list_col
+        )
     return vdir
 
 
@@ -909,20 +905,18 @@ def rebuild_ivfpq_index(
     append-then-rebuild hash-equal q_ann_ivfpq's.  The new tree lands in
     ``<path>/v<N>``; the ``_CURRENT`` pointer swap is the only mutation
     the live index ever sees.  Returns the new version directory."""
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
     train = embeddings
     if train_mod > 1:
         train = embeddings.filter((F.col(id_col) % train_mod) == 0)
-    build_ivfpq_index(
-        train, vdir, n_sub, k, iters,
-        id_col=id_col, vec_col=vec_col, list_col=list_col, dim=dim,
-        by_residual=by_residual,
-    )
-    if train_mod > 1:
-        rest = embeddings.filter((F.col(id_col) % train_mod) != 0)
-        append_ivfpq_index(
-            spark, rest, vdir, n_sub, id_col=id_col, vec_col=vec_col, dim=dim
+    with new_index_version(path) as vdir:
+        build_ivfpq_index(
+            train, vdir, n_sub, k, iters,
+            id_col=id_col, vec_col=vec_col, list_col=list_col, dim=dim,
+            by_residual=by_residual,
         )
-    publish_index_version(path, new_v)
+        if train_mod > 1:
+            rest = embeddings.filter((F.col(id_col) % train_mod) != 0)
+            append_ivfpq_index(
+                spark, rest, vdir, n_sub, id_col=id_col, vec_col=vec_col, dim=dim
+            )
     return vdir

@@ -15,7 +15,7 @@ Layout (versioned behind the atomic ``_CURRENT`` pointer):
   batch BEFORE its exchange, exactly like the inline plan.  The bitmap
   is itself versioned behind a ``_CURRENT`` pointer inside the bloom
   component (``bloom/v<N>``): an OR-merge writes the merged bitmap to
-  ``v<N+1>`` and then swaps the pointer atomically, so the live bitmap
+  the next version and then swaps the pointer atomically, so the live bitmap
   is never deleted-then-rewritten — a crash mid-merge leaves the old
   complete bitmap published and the torn new one unreferenced;
 * ``<root>/tot``   — (doc_id, n_shingles) per eval doc: the output's
@@ -40,7 +40,6 @@ exchange), and a semi-join into only the matching shingle buckets.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +49,8 @@ from hnarchive_spark.operators.dedup import word_shingles
 from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
+    prune_index_versions,
 )
 
 N_SH_BUCKETS = 64
@@ -77,22 +77,17 @@ def _bloom_data_path(path: str) -> str:
 
 
 def _publish_bloom(bitmap: DataFrame, broot: str) -> None:
-    """Write ``bitmap`` to ``<broot>/v<N+1>`` and atomically swap the
-    pointer.  Versions older than the immediately superseded one are
-    pruned (the bitmap is at most ``2^log2_bits/64`` rows, and keeping
-    exactly one back version protects a reader that resolved the
-    pointer just before the swap).  This inline prune is the module's
-    DOCUMENTED divergence from the index_version.py retain-until-
-    prune_index_versions contract (see that module's docstring): the
-    bitmap is republished per merge, so retain-until-pruned would grow a
-    version per append for a scalar-sized artifact."""
-    new_v = (current_index_version(broot) or 0) + 1
-    bitmap.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(broot, f"v{new_v}")
-    )
-    publish_index_version(broot, new_v)
-    for stale in range(1, new_v - 1):
-        shutil.rmtree(os.path.join(broot, f"v{stale}"), ignore_errors=True)
+    """Write ``bitmap`` as the next version of ``broot`` and atomically
+    swap the pointer, then prune all but the immediately superseded
+    version (``keep=1``): the bitmap is at most ``2^log2_bits/64`` rows
+    and republished on every merge, so retain-until-pruned would grow a
+    version per append for a scalar-sized artifact, while the one back
+    version protects a reader that resolved the pointer just before the
+    swap."""
+    with new_index_version(broot) as vdir:
+        # append: the claimed root holds its marker
+        bitmap.coalesce(1).write.mode("append").parquet(vdir)
+    prune_index_versions(broot, keep=1)
 
 
 def _tot_path(path: str) -> str:
@@ -294,23 +289,21 @@ def recover_contamination_index(spark: SparkSession, path: str) -> str:
     the recovery verb AND the compaction (ev rewrites clustered)."""
     ev = spark.read.parquet(_ev_path(path)).select("doc_id", "shingle").distinct()
     ev = ev.localCheckpoint(eager=True)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        ev.withColumn("s_bucket", _s_bucket())
-        .repartition("s_bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("s_bucket")
-        .parquet(os.path.join(vdir, "ev"))
-    )
-    _publish_bloom(bloom_build(ev, "shingle"), os.path.join(vdir, "bloom"))
-    (
-        ev.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shingles"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(vdir, "tot"))
-    )
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        (
+            ev.withColumn("s_bucket", _s_bucket())
+            .repartition("s_bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("s_bucket")
+            .parquet(os.path.join(vdir, "ev"))
+        )
+        _publish_bloom(bloom_build(ev, "shingle"), os.path.join(vdir, "bloom"))
+        (
+            ev.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_shingles"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(vdir, "tot"))
+        )
     return vdir

@@ -47,9 +47,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 N_GRAM_BUCKETS = 64
@@ -224,17 +223,14 @@ def compact_gram_index(spark, path: str) -> str:
     """Rewrite the bucket partitions at full file sizes (and collapse any
     duplicate rows a torn append may have left) into ``<path>/v<N>``
     behind the atomic pointer; returns the new version directory."""
-    old_root = index_root(path)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        spark.read.parquet(old_root)
-        .distinct()
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(vdir)
-    )
-    publish_index_version(path, new_v)
+    old = spark.read.parquet(index_root(path))
+    with new_index_version(path) as vdir:
+        (
+            old.distinct()
+            .repartition("bucket")
+            .write.mode("append")  # the claimed root holds its marker
+            .option("compression", "zstd")
+            .partitionBy("bucket")
+            .parquet(vdir)
+        )
     return vdir

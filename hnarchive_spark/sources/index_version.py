@@ -1,44 +1,82 @@
-"""Atomic version pointers for persisted secondary indexes (ANN, text).
+"""Versioned directories behind an atomic pointer: the one commit
+boundary of every persisted index, store and release.
 
 The persisted index families support O(batch) appends against FROZEN
 quantizers — at 100 TB that accrues two liabilities the judge's r10
 verdict names: recall degrades as the corpus drifts from the training
 sample, and every append drops more small files into each list/term
 partition.  The lifecycle answer is a periodic REBUILD (retrain +
-re-encode) or COMPACTION (rewrite partitions at full files), and both
-need a publish step that never breaks a concurrent reader.
+re-encode) or COMPACTION (rewrite partitions at full files); the
+release run publishes each release the same way.  All of them need a
+publish step that never breaks a concurrent reader, and this module is
+the only code that allocates, publishes, heals and prunes versions:
 
-This module is that publish step — the items store's ``_CURRENT``
-discipline (sources/items_store.py ``_commit``) applied to indexes:
+* a freshly built index may be FLAT (``<path>/codes``,
+  ``<path>/postings``, ...) — nothing changes for the common case;
+* a rebuild/compaction/release runs inside :func:`new_index_version`,
+  which CLAIMS the next ``<path>/v<N>/`` and publishes it on clean exit
+  by ``os.replace``-ing the tiny ``_CURRENT`` pointer — the only
+  mutation the live tree ever sees is one atomic rename, so a reader
+  that resolved the root before the swap keeps a complete, immutable
+  version, and one that resolves after it sees the new version in full;
+* a claim is race-free: a staged ``_claim.*`` directory already holding
+  the ``_BUILDING.json`` liveness marker is renamed onto ``v<N>``, and a
+  rename onto a held (non-empty) number fails, so two concurrent
+  builders can never share a directory and at no instant does a claimed
+  directory lack its marker.  The marker is removed only after the
+  publish, so a marked version is an unfinished attempt;
+* :func:`heal_torn_versions` removes unfinished attempts above the
+  pointer whose builder is dead; it never touches the published
+  version;
+* old versions are retained until :func:`prune_index_versions`, which
+  never removes a live builder's directory.  Its ``keep`` argument
+  retains that many superseded versions — the contamination index's
+  Bloom bitmap (contamination_index._publish_bloom) is republished on
+  every merge and prunes with ``keep=1`` at publish time, so a reader
+  one merge stale still holds its bitmap while versions do not pile up.
 
-* a freshly built index is FLAT (``<path>/codes``, ``<path>/postings``,
-  ...) — nothing changes for the common case;
-* a rebuild/compaction writes a complete new tree under ``<path>/v<N>/``
-  and then publishes it by ``os.replace``-ing the tiny ``_CURRENT``
-  pointer — the only mutation the live tree ever sees is one atomic
-  rename, so a reader that resolved the root before the swap keeps a
-  complete, immutable index, and one that resolves after it sees the
-  new version in full;
-* old versions are retained until :func:`prune_index_versions` — the
-  same time-travel-until-pruned model as the store.
-
-ONE documented divergence (ADVICE r14): the contamination index's Bloom
-bitmap (contamination_index._publish_bloom) prunes its own superseded
-versions INLINE at publish time, keeping exactly one back version — the
-bitmap is scalar-sized, republished on every merge, and would otherwise
-accumulate a version per append; a reader more than one merge stale can
-have its bloom directory deleted mid-scan there (it falls back to a
-re-resolve).  Every OTHER family follows the retain-until-pruned
-contract above.
+Spark's reader skips ``_``-prefixed files, so the marker is harmless
+inside a version that is itself a parquet root.
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
+import time
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 _POINTER = "_CURRENT"
+_MARKER = "_BUILDING.json"
+_CLAIM_PREFIX = "_claim."  # staging dirs for atomic version allocation
+
+# A _BUILDING.json older than this reads as dead even when its pid is
+# running: pids recycle, and on a long-lived host a recycled pid would
+# otherwise make a genuinely dead torn dir look alive FOREVER, deferring
+# heal indefinitely.  No build legitimately runs this long; a real
+# builder that somehow does loses only its in-progress dir (it re-runs),
+# never published data.
+BUILDER_STALE_SECONDS = 6 * 3600
+
+# A marker-less _claim.* staging dir younger than this is presumed to be
+# a concurrent run mid-claim (between its mkdir and its marker write) and
+# is never swept — the grace that closes the last half-made-dir window.
+CLAIM_GRACE_SECONDS = 300
+
+# Pre-versioning flat data dirs a published version supersedes: ANN
+# (codes/lists/centroids/codebooks), text (postings), MinHash index
+# (bands/docs), contamination gate (ev/bloom/tot), SCD2 store (runs),
+# ingest doc store (docs/urls), raw-vector store (vectors).  The LSH and
+# gram indexes keep their flat partitions directly at the root
+# (``bucket=*``).
+_FLAT_DATA = frozenset((
+    "codes", "lists", "centroids", "codebooks", "postings",
+    "bands", "docs", "ev", "bloom", "tot", "runs", "urls", "vectors",
+))
 
 
 def current_index_version(path: str) -> int | None:
@@ -68,37 +106,187 @@ def publish_index_version(path: str, version: int) -> None:
     os.replace(tmp, os.path.join(path, _POINTER))
 
 
-def prune_index_versions(path: str, keep_current_only: bool = True) -> list[str]:
-    """Delete version directories other than the published one (and any
-    leftover flat-layout data dirs once a versioned root is live).
-    Returns the removed paths.  Callers run this only once no reader can
-    still hold the old version — the same operational contract as store
-    snapshot pruning."""
+def _listdir(path: str) -> list[str]:
+    try:
+        return sorted(os.listdir(path))
+    except FileNotFoundError:
+        return []
+
+
+def _is_version(name: str) -> bool:
+    return name.startswith("v") and name[1:].isdigit()
+
+
+def _write_marker(vdir: str, **extra) -> None:
+    with open(os.path.join(vdir, _MARKER), "w") as fh:
+        json.dump({"pid": os.getpid(), "ts": time.time(), **extra}, fh)
+
+
+def claim_index_version(path: str) -> tuple[int, str]:
+    """Allocate the next version of ``path``: returns ``(N, <path>/v<N>)``
+    with the directory already holding this process's liveness marker.
+    Numbers above every existing version (published or not) are tried
+    in order until a rename lands, so a concurrent claim is skipped,
+    never overwritten."""
+    os.makedirs(path, exist_ok=True)
+    staged = os.path.join(path, _CLAIM_PREFIX + uuid.uuid4().hex)
+    os.mkdir(staged)
+    _write_marker(staged)
+    version = max(
+        [current_index_version(path) or 0]
+        + [int(n[1:]) for n in _listdir(path) if _is_version(n)]
+    )
+    while True:
+        version += 1
+        vdir = os.path.join(path, f"v{version}")
+        try:
+            os.rename(staged, vdir)
+            return version, vdir
+        except OSError as exc:  # a concurrent claim holds this number
+            if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                raise
+
+
+@contextmanager
+def new_index_version(path: str) -> Iterator[str]:
+    """Claim the next version of ``path``, yield its directory for the
+    caller to fill, and publish it when the block exits cleanly.
+
+    The marker comes off only AFTER the pointer swap.  If the block
+    raises, the marker is rewritten as failed, so the attempt reads as
+    dead at once and the next heal removes it.  If the publish itself
+    raises, the live marker stays: the attempt is off-limits while this
+    process lives and healable once it is gone."""
+    version, vdir = claim_index_version(path)
+    try:
+        yield vdir
+    except BaseException:
+        _write_marker(vdir, failed=True)
+        raise
+    publish_index_version(path, version)
+    os.remove(os.path.join(vdir, _MARKER))
+
+
+def _builder_alive(vdir: str) -> bool:
+    """True if the ``_BUILDING.json`` marker names a process that is
+    still running on this host AND the marker is fresh — the guard that
+    keeps heal and prune from rmtree-ing a LIVE concurrent build
+    (without it, auto-heal turns an accidental concurrent run into
+    active data destruction).  A missing/corrupt/unreadable marker, a
+    failed build, a dead pid, or a marker older than
+    :data:`BUILDER_STALE_SECONDS` (pid-reuse guard: a recycled pid must
+    not defer heal forever) reads as not-alive: exactly the crashed-run
+    case heal exists for."""
+    try:
+        with open(os.path.join(vdir, _MARKER)) as fh:
+            marker = json.load(fh)
+        pid = int(marker["pid"])
+        ts = marker.get("ts")
+        if ts is not None and time.time() - float(ts) > BUILDER_STALE_SECONDS:
+            return False  # stale marker: treat a matching pid as recycled
+        if marker.get("failed"):
+            return False
+    except (OSError, ValueError, KeyError, TypeError):
+        # unreadable file, non-dict/null JSON (TypeError),
+        # malformed pid/ts: all read as not-alive, never as a crash
+        return False
+    if pid <= 0:
+        # no real builder has a non-positive pid — and os.kill(-1, 0)
+        # probes a whole PROCESS GROUP (always "alive"), so a corrupt
+        # negative pid would otherwise defer heal forever
+        return False
+    try:
+        os.kill(pid, 0)  # signal 0: existence probe, delivers nothing
+        return True
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # pid exists but owned elsewhere — alive
+        return True
+    except OverflowError:
+        # a pid outside the C pid_t range cannot name a live process;
+        # reading it as a crash would brick every subsequent
+        # heal/prune run on one corrupt marker
+        return False
+
+
+def _in_use(name: str, full: str) -> bool:
+    """True while a builder may still own ``full``: its marker names a
+    live process, or it is a staging dir young enough to be mid-claim
+    (between its mkdir and its marker write)."""
+    if name.startswith(_CLAIM_PREFIX):
+        try:
+            if time.time() - os.path.getmtime(full) < CLAIM_GRACE_SECONDS:
+                return True
+        except OSError:  # raced away already
+            return True
+    return _builder_alive(full)
+
+
+def torn_versions(path: str) -> list[str]:
+    """Healable torn attempts — detection only (the maintenance
+    scheduler's due-predicate); :func:`heal_torn_versions` is the
+    removal.  Two shapes qualify, both requiring a builder that is not
+    alive:
+
+    * a version dir numbered above the pointer (or with no pointer yet)
+      that still carries its marker: it died, or failed, between its
+      claim and its publish, so readers never saw it.  Nothing at or
+      below the pointer qualifies — a superseded version, even one whose
+      builder died between its pointer swap and its marker removal, is
+      retained until pruned;
+    * a leftover ``_claim.*`` staging dir (died between its mkdir and
+      the rename that claims a version number), once past the grace."""
+    cur = current_index_version(path)
+    torn = []
+    for name in _listdir(path):
+        full = os.path.join(path, name)
+        if not os.path.isdir(full):
+            continue
+        unpublished = (
+            _is_version(name)
+            and (cur is None or int(name[1:]) > cur)
+            and os.path.exists(os.path.join(full, _MARKER))
+        )
+        if (unpublished or name.startswith(_CLAIM_PREFIX)) and not _in_use(name, full):
+            torn.append(full)
+    return torn
+
+
+def heal_torn_versions(path: str) -> list[str]:
+    """Remove the attempts :func:`torn_versions` finds and return their
+    paths.  Safe at any time: readers never saw them (the pointer only
+    moves after a build completes), and the PUBLISHED version is never
+    touched, even if it still carries a stale marker."""
+    torn = torn_versions(path)
+    for full in torn:
+        shutil.rmtree(full)
+    return torn
+
+
+def prune_index_versions(path: str, keep: int = 0) -> list[str]:
+    """Delete version directories other than the published one and the
+    ``keep`` newest superseded ones, dead ``_claim.*`` staging dirs, and
+    leftover flat-layout data dirs once a versioned root is live.  A dir
+    whose builder is alive (or a staging dir still in its claim grace)
+    is never removed.  Returns the removed paths.  Callers run this only
+    once no reader can still hold a removed version — the same
+    operational contract as store snapshot pruning."""
     cur = current_index_version(path)
     if cur is None:
         return []
+    names = _listdir(path)
+    older = sorted(int(n[1:]) for n in names if _is_version(n) and int(n[1:]) < cur)
+    retained = {f"v{v}" for v in [cur] + older[max(0, len(older) - keep):]}
     removed = []
-    keep = f"v{cur}"
-    for name in sorted(os.listdir(path)):
+    for name in names:
         full = os.path.join(path, name)
-        if name == keep or name.startswith(_POINTER) or not os.path.isdir(full):
+        if name in retained or not os.path.isdir(full):
             continue
-        if name.startswith("v") and name[1:].isdigit() and not keep_current_only:
+        if _is_version(name) or name.startswith(_CLAIM_PREFIX):
+            if _in_use(name, full):
+                continue  # a LIVE concurrent build — never prune it
+        elif not (name in _FLAT_DATA or name.startswith("bucket=")):
             continue
-        if name.startswith("v") and name[1:].isdigit():
-            shutil.rmtree(full)
-            removed.append(full)
-        elif name in (
-            "codes", "lists", "centroids", "codebooks", "postings",
-            # MinHash index (bands/docs), contamination gate (ev/bloom/tot),
-            # SCD2 store (runs), ingest doc store (docs/urls), raw-vector
-            # store (vectors) — all publish rebuilds into v<N>, leaving
-            # their flat pre-versioning trees superseded
-            "bands", "docs", "ev", "bloom", "tot", "runs", "urls", "vectors",
-        ) or name.startswith("bucket="):
-            # pre-versioning flat data superseded by the published version
-            # (bucket=* is the LSH index's flat layout — its partitions
-            # live directly at the root, not under a named data dir)
-            shutil.rmtree(full)
-            removed.append(full)
+        shutil.rmtree(full)
+        removed.append(full)
     return removed

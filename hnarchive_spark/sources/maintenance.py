@@ -39,8 +39,10 @@ import os
 
 from hnarchive_spark.sources.index_version import (
     current_index_version,
+    heal_torn_versions,
     index_root,
     prune_index_versions,
+    torn_versions,
 )
 
 # Sidecar recording a tokenizer extend that FAILED to clear the
@@ -225,9 +227,7 @@ def _execute(spark, kind: str, path: str) -> str:
 
         return compact_vec_store(spark, path)
     if kind == "release":
-        from hnarchive_spark.plans.release import heal_torn_releases
-
-        return f"healed: {heal_torn_releases(path)}"
+        return f"healed: {heal_torn_versions(path)}"
     raise ValueError(f"no self-contained verb for {kind}")
 
 
@@ -387,11 +387,9 @@ def run_maintenance(
             continue
         if kind == "release":
             # releases have no append ledger — due is structural: a
-            # healable torn attempt on disk (manifest-less, unpublished,
-            # builder dead; plans/release.torn_release_dirs)
-            from hnarchive_spark.plans.release import torn_release_dirs
-
-            rec["due"] = bool(torn_release_dirs(path))
+            # healable torn attempt on disk (unpublished, still marked,
+            # builder dead; index_version.torn_versions)
+            rec["due"] = bool(torn_versions(path))
         else:
             rec["due"] = needs_maintenance(
                 path, max_skipped=max_skipped, max_batches=max_batches
@@ -406,18 +404,7 @@ def run_maintenance(
         rec["result"] = _execute(spark, kind, path)
         rec["executed"] = True
         maintenance_stats(path, reset=True)  # the verb consumed the ledger
-        if prune:
-            if kind == "release":
-                # release-aware prune (ADVICE r17): the raw index pruner
-                # rmtree's every non-current v<N> unconditionally, which
-                # would destroy a concurrent LIVE builder's in-progress
-                # version — releases go through the _builder_alive guard
-                from hnarchive_spark.plans.release import (
-                    prune_release_versions,
-                )
-
-                prune_release_versions(path)
-            else:
-                prune_index_versions(path)
+        if prune:  # never removes a live builder's version
+            prune_index_versions(path)
         out.append(rec)
     return out

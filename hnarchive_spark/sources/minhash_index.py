@@ -58,9 +58,8 @@ from hnarchive_spark.operators.dedup import (
     word_shingles,
 )
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 N_MH_BUCKETS = 64
@@ -353,25 +352,23 @@ def compact_minhash_index(spark: SparkSession, path: str) -> str:
     families there is no trained state, so compaction IS the rebuild."""
     old_bands = _bands_path(path)
     old_docs = _docs_path(path)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        spark.read.parquet(old_bands)
-        .distinct()
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(os.path.join(vdir, "bands"))
-    )
-    (
-        spark.read.parquet(old_docs)
-        .dropDuplicates(["doc_id"])
-        .repartition("d_bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("d_bucket")
-        .parquet(os.path.join(vdir, "docs"))
-    )
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        (
+            spark.read.parquet(old_bands)
+            .distinct()
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("bucket")
+            .parquet(os.path.join(vdir, "bands"))
+        )
+        (
+            spark.read.parquet(old_docs)
+            .dropDuplicates(["doc_id"])
+            .repartition("d_bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("d_bucket")
+            .parquet(os.path.join(vdir, "docs"))
+        )
     return vdir

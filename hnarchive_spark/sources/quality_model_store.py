@@ -40,9 +40,8 @@ from pyspark.sql import functions as F
 
 from hnarchive_spark.operators.quality import QUALITY_W_BUCKETS
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 
@@ -61,7 +60,7 @@ def publish_quality_model(
     path: str,
     n_buckets: int = QUALITY_W_BUCKETS,
 ) -> str:
-    """Validate + write ``model`` (bucket, w_e4) into ``<path>/v<N+1>``
+    """Validate + write ``model`` (bucket, w_e4) into ``<path>/v<N>``
     and publish it at the atomic pointer swap.  Returns the new version
     directory.  Raises ValueError (live version untouched) if any weight
     is negative or any bucket is outside [0, n_buckets)."""
@@ -86,18 +85,16 @@ def publish_quality_model(
         )
     if int(stats["n_distinct"]) != int(stats["n"]):
         raise ValueError("duplicate bucket rows in quality model")
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    model.select(
-        F.col("bucket").cast("long"), F.col("w_e4").cast("long")
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "weights"))
-    tmp = os.path.join(vdir, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"n_buckets": int(n_buckets), "n_weights": int(stats["n"])}, fh
-        )
-    os.replace(tmp, os.path.join(vdir, "_META.json"))
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        model.select(
+            F.col("bucket").cast("long"), F.col("w_e4").cast("long")
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "weights"))
+        tmp = os.path.join(vdir, "_META.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(
+                {"n_buckets": int(n_buckets), "n_weights": int(stats["n"])}, fh
+            )
+        os.replace(tmp, os.path.join(vdir, "_META.json"))
     return vdir
 
 

@@ -30,9 +30,8 @@ from pyspark.sql import functions as F
 
 from hnarchive_spark.operators.scd2 import close_intervals, merge_scd2_runs, scd2_runs
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 N_BUCKETS = 32
@@ -160,18 +159,16 @@ def compact_scd2(spark: SparkSession, path: str, n_buckets: int | None = None) -
     tests/test_scd2_store.py). Returns the new version directory."""
     nb = int(n_buckets) if n_buckets else _n_buckets(path)
     old = _runs_path(path)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        _with_bucket(spark.read.parquet(old).drop("u_bucket"), nb)
-        .repartition("u_bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("u_bucket")
-        .parquet(os.path.join(vdir, "runs"))
-    )
-    _write_meta(vdir, nb)
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        (
+            _with_bucket(spark.read.parquet(old).drop("u_bucket"), nb)
+            .repartition("u_bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("u_bucket")
+            .parquet(os.path.join(vdir, "runs"))
+        )
+        _write_meta(vdir, nb)
     return vdir
 
 

@@ -46,7 +46,7 @@ from hnarchive_spark.operators.similarity import as_double, dot, norm, semdedup_
 from hnarchive_spark.sources.index_version import (
     current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 
@@ -370,11 +370,10 @@ def rebuild_semdedup_index(
     # else the published root would break semdedup_probe_batch and
     # prune_index_versions would delete the only copy
     has_lists = os.path.isdir(_lists_path(path))
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    _train_and_write(
-        spark, vectors, vdir, k, iters, id_col, vec_col,
-        store_assignments=has_lists, version=new_v,
-    )
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        _train_and_write(
+            spark, vectors, vdir, k, iters, id_col, vec_col,
+            store_assignments=has_lists,
+            version=int(os.path.basename(vdir)[1:]),
+        )
     return vdir

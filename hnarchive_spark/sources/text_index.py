@@ -35,9 +35,8 @@ from pyspark.sql import functions as F
 
 from hnarchive_spark.functions import text as T
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 N_TERM_BUCKETS = 64
@@ -491,15 +490,13 @@ def compact_text_index(spark, path: str) -> str:
     version.  Returns the new version directory."""
     _read_stats(path)  # raises on an unfinished append
     old_root = index_root(path)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        spark.read.parquet(f"{old_root}/postings")
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(f"{vdir}/postings")
-    )
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        (
+            spark.read.parquet(f"{old_root}/postings")
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("bucket")
+            .parquet(f"{vdir}/postings")
+        )
     return vdir

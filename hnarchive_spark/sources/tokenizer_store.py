@@ -31,9 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 
@@ -42,7 +41,7 @@ def _publish_rules(
     rules: list[tuple[int, str, str, int]],
     vocab: dict[str, int] | None = None,
 ) -> str:
-    """Write the rule list as ``<path>/v<N+1>/_RULES.json`` and publish
+    """Write the rule list as ``<path>/v<N>/_RULES.json`` and publish
     at the atomic pointer swap.  ``rounds`` is recorded as len(rules) —
     the count actually induced, which is SHORTER than the requested
     rounds when induction exhausts a tiny corpus (review r16: build
@@ -52,24 +51,21 @@ def _publish_rules(
     centroid-list convention) — recorded so the maintenance scheduler can measure how
     far a future corpus has drifted from what this tokenizer was trained
     on (:func:`tokenizer_coverage`, VERDICT r16 #5)."""
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    os.makedirs(vdir, exist_ok=True)
-    tmp = os.path.join(vdir, "_RULES.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "rounds": len(rules),
-                "rules": [
-                    {"merge_round": k, "left": a, "right": b, "n_occurrences": n}
-                    for k, a, b, n in rules
-                ],
-                **({} if vocab is None else {"vocab": dict(sorted(vocab.items()))}),
-            },
-            fh,
-        )
-    os.replace(tmp, os.path.join(vdir, "_RULES.json"))
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        tmp = os.path.join(vdir, "_RULES.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(
+                {
+                    "rounds": len(rules),
+                    "rules": [
+                        {"merge_round": k, "left": a, "right": b, "n_occurrences": n}
+                        for k, a, b, n in rules
+                    ],
+                    **({} if vocab is None else {"vocab": dict(sorted(vocab.items()))}),
+                },
+                fh,
+            )
+        os.replace(tmp, os.path.join(vdir, "_RULES.json"))
     return vdir
 
 
@@ -130,7 +126,7 @@ def build_tokenizer_store(
     text_col: str = "text",
 ) -> str:
     """Induce ``rounds`` BPE merge rules over ``docs`` (the full iterative
-    re-count loop) and publish them as ``<path>/v<N+1>/_RULES.json``
+    re-count loop) and publish them as ``<path>/v<N>/_RULES.json``
     behind the atomic pointer swap.  Returns the new version directory."""
     from hnarchive_spark.plans.textops import BPE_TRAIN_ROUNDS, induce_bpe_rules
 

@@ -18,7 +18,7 @@ Layout (versioned behind the ``_CURRENT`` pointer, index_version.py):
 * ``<root>/_META.json`` — ``n_buckets`` (+ the build's row count).
 
 Lifecycle (the house discipline every persisted family follows):
-build = validated full write into ``v<N+1>`` + atomic pointer swap;
+build = validated full write into ``v<N>`` + atomic pointer swap;
 append = presence anti-join pruned to the batch's OWN buckets
 (idempotent under streaming re-delivery, O(batch)); compact =
 small-file rewrite into a fresh version (appends accrete one file per
@@ -37,9 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hnarchive_spark.sources.index_version import (
-    current_index_version,
     index_root,
-    publish_index_version,
+    new_index_version,
 )
 
 DEFAULT_VEC_BUCKETS = 64
@@ -66,7 +65,7 @@ def build_vec_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
-    """Write ``vectors`` into ``<path>/v<N+1>/vectors`` bucketed by id
+    """Write ``vectors`` into ``<path>/v<N>/vectors`` bucketed by id
     and publish at the atomic pointer swap.  Returns the new version
     directory.  Raises ValueError (live version untouched) on duplicate
     ids — a point-fetch store with two rows per id would silently
@@ -82,21 +81,19 @@ def build_vec_store(
             f"duplicate vec_id rows ({stats['n']} rows, {stats['nd']} ids) — "
             "a point-fetch store must be unique per id"
         )
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    (
-        v.withColumn("bucket", _bucket(F.col("vec_id"), n_buckets))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(os.path.join(vdir, "vectors"))
-    )
-    tmp = os.path.join(vdir, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"n_buckets": int(n_buckets), "n_vectors": int(stats["n"])}, fh)
-    os.replace(tmp, os.path.join(vdir, "_META.json"))
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        (
+            v.withColumn("bucket", _bucket(F.col("vec_id"), n_buckets))
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("bucket")
+            .parquet(os.path.join(vdir, "vectors"))
+        )
+        tmp = os.path.join(vdir, "_META.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump({"n_buckets": int(n_buckets), "n_vectors": int(stats["n"])}, fh)
+        os.replace(tmp, os.path.join(vdir, "_META.json"))
     return vdir
 
 
@@ -173,29 +170,26 @@ def fetch_vectors(spark: SparkSession, path: str, ids: list[int]) -> DataFrame:
 
 def compact_vec_store(spark: SparkSession, path: str) -> str:
     """Rewrite the bucket partitions at full file sizes into a new
-    ``<path>/v<N+1>`` tree with an atomic pointer swap — the lifecycle
+    ``<path>/v<N>`` tree with an atomic pointer swap — the lifecycle
     counterpart of :func:`append_vec_store` (each append leaves one
     small file per touched bucket).  Reads the store's own rows; fetch
     results are unchanged by construction.  Returns the new version
     directory."""
     meta = vec_store_meta(path)
-    old = _vectors_path(path)
-    new_v = (current_index_version(path) or 0) + 1
-    vdir = os.path.join(path, f"v{new_v}")
-    df = spark.read.parquet(old)
+    df = spark.read.parquet(_vectors_path(path))
     n = df.count()
-    (
-        df.repartition("bucket")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("bucket")
-        .parquet(os.path.join(vdir, "vectors"))
-    )
-    tmp = os.path.join(vdir, "_META.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"n_buckets": int(meta["n_buckets"]), "n_vectors": int(n)}, fh)
-    os.replace(tmp, os.path.join(vdir, "_META.json"))
-    publish_index_version(path, new_v)
+    with new_index_version(path) as vdir:
+        (
+            df.repartition("bucket")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("bucket")
+            .parquet(os.path.join(vdir, "vectors"))
+        )
+        tmp = os.path.join(vdir, "_META.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump({"n_buckets": int(meta["n_buckets"]), "n_vectors": int(n)}, fh)
+        os.replace(tmp, os.path.join(vdir, "_META.json"))
     return vdir
 
 

@@ -327,39 +327,34 @@ def compact_ingest_store(spark, store_path: str) -> str:
     """Collapse the per-batch small-file pileup: every ingest batch
     appends ~1 file per touched bucket, so K batches leave ~K files per
     bucket until compacted.  Rewrites docs (and urls, if the URL stage
-    ever ran) coalesced per bucket into ``<store>/v<N+1>`` and publishes
+    ever ran) coalesced per bucket into ``<store>/v<N>`` and publishes
     at the atomic pointer swap (index_version.py) — readers that
     resolved the old root keep a complete tree until
     prune_index_versions.  Returns the new version directory."""
-    from hnarchive_spark.sources.index_version import (
-        current_index_version,
-        publish_index_version,
-    )
+    from hnarchive_spark.sources.index_version import new_index_version
 
     docs = spark.read.parquet(_store_docs_path(store_path))
     urls = None
     if os.path.isdir(_store_urls_path(store_path)):
         urls = spark.read.parquet(_store_urls_path(store_path))
-    new_v = (current_index_version(store_path) or 0) + 1
-    vdir = os.path.join(store_path, f"v{new_v}")
-    (
-        docs.repartition("d_bucket")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("d_bucket")
-        .parquet(os.path.join(vdir, "docs"))
-    )
-    if urls is not None:
+    with new_index_version(store_path) as vdir:
         (
-            urls.repartition("u_bucket")
-            .sortWithinPartitions("curl")
+            docs.repartition("d_bucket")
+            .sortWithinPartitions("doc_id")
             .write.mode("overwrite")
             .option("compression", "zstd")
-            .partitionBy("u_bucket")
-            .parquet(os.path.join(vdir, "urls"))
+            .partitionBy("d_bucket")
+            .parquet(os.path.join(vdir, "docs"))
         )
-    publish_index_version(store_path, new_v)
+        if urls is not None:
+            (
+                urls.repartition("u_bucket")
+                .sortWithinPartitions("curl")
+                .write.mode("overwrite")
+                .option("compression", "zstd")
+                .partitionBy("u_bucket")
+                .parquet(os.path.join(vdir, "urls"))
+            )
     return vdir
 
 

@@ -802,3 +802,23 @@ def test_pack_waste_is_metadata_only(spark):
     assert plan.count("FlatMapGroupsInPandas") == 6, plan[:1200]
     assert "BroadcastHashJoin" in plan, plan[:1200]
     assert "SortMergeJoin" not in plan, plan[:1200]
+
+
+def test_version_allocation_lives_in_index_version_only():
+    """sources/index_version.py is the one module that allocates,
+    marks, publishes, heals and prunes versions: no other module may
+    compute a next version as ``(current_index_version(...) or 0) + 1``
+    or name the ``_BUILDING.json`` liveness marker."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "hnarchive_spark"
+    owner = pkg / "sources" / "index_version.py"
+    next_version = re.compile(r"current_index_version\([^()]*\)\s+or\s+0\)\s*\+\s*1")
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p != owner
+        and (next_version.search(p.read_text()) or "_BUILDING.json" in p.read_text())
+    ]
+    assert offenders == []

@@ -27,10 +27,12 @@ pytestmark = pytest.mark.exhaustive
 from pyspark.sql import functions as F
 
 from hnarchive_spark.plans.release import (
-    heal_torn_releases,
     latest_release_manifest,
     release_root,
     run_release,
+)
+from hnarchive_spark.sources.index_version import (
+    heal_torn_versions as heal_torn_releases,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -255,7 +257,7 @@ def test_crash_between_manifest_and_publish_heals(spark, tmp_path, monkeypatch):
     forever) — once the builder is dead, heal removes the attempt and
     the next run supersedes cleanly."""
     import hnarchive_spark.sources.index_version as iv
-    from hnarchive_spark.plans.release import torn_release_dirs
+    from hnarchive_spark.sources.index_version import torn_versions as torn_release_dirs
 
     out = str(tmp_path / "rel")
     m1 = run_release(spark, SF, out)
@@ -293,7 +295,7 @@ def test_crash_between_manifest_and_publish_heals(spark, tmp_path, monkeypatch):
 def test_superseded_published_version_never_torn(spark, tmp_path):
     """Retain-until-pruned: a previously-published version (manifest, no
     marker, below the pointer) is NOT torn — only prune may remove it."""
-    from hnarchive_spark.plans.release import torn_release_dirs
+    from hnarchive_spark.sources.index_version import torn_versions as torn_release_dirs
 
     out = str(tmp_path / "rel")
     run_release(spark, SF, out)
@@ -307,7 +309,9 @@ def test_prune_never_removes_live_builder(spark, tmp_path):
     """ADVICE r17: release pruning must skip a concurrent LIVE builder's
     in-progress dir (the raw index pruner rmtree's it unconditionally),
     then remove it once the builder is dead."""
-    from hnarchive_spark.plans.release import prune_release_versions
+    from hnarchive_spark.sources.index_version import (
+        prune_index_versions as prune_release_versions,
+    )
 
     out = str(tmp_path / "rel")
     run_release(spark, SF, out)
@@ -336,7 +340,7 @@ def test_builder_alive_stale_and_corrupt_markers(tmp_path):
     as dead instead of crashing heal."""
     import time as _time
 
-    from hnarchive_spark.plans.release import (
+    from hnarchive_spark.sources.index_version import (
         BUILDER_STALE_SECONDS,
         _builder_alive,
     )
@@ -414,7 +418,9 @@ def test_stale_claim_dir_swept_by_heal(spark, tmp_path):
 
     # prune applies the same guards: live + mid-claim survive
     run_release(spark, SF, out)  # v2 so prune has something current
-    from hnarchive_spark.plans.release import prune_release_versions
+    from hnarchive_spark.sources.index_version import (
+        prune_index_versions as prune_release_versions,
+    )
 
     removed = prune_release_versions(out)
     assert live not in removed and midclaim not in removed

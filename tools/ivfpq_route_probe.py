@@ -26,13 +26,11 @@ from pyspark.sql import functions as F
 from hnarchive_spark.operators.similarity import as_double, cosine, norm
 from hnarchive_spark.session import get_spark
 from hnarchive_spark.sources.ann_index import (
-    _ivfpq_meta,
     build_ivf_index,
     build_ivfpq_index,
     index_root,
     probe_ivf_topk,
     probe_ivfpq_topk,
-    sq_dist,
 )
 from hnarchive_spark.tables import load
 
